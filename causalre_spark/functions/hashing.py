@@ -15,6 +15,7 @@ differ, which would make cross-engine value-hash comparison impossible.
 
 from __future__ import annotations
 
+import functools
 import hashlib
 
 HEX_DIGITS = "0123456789abcdef"
@@ -68,8 +69,11 @@ def md5_long_sql_spark(expr: str, nhex: int = DEFAULT_NHEX) -> str:
 MERSENNE31 = (1 << 31) - 1
 
 
+@functools.cache
 def cw_params(seed: int) -> tuple[int, int]:
-    """Frozen per-seed (a, b) with 1 <= a < p, 0 <= b < p."""
+    """Frozen per-seed (a, b) with 1 <= a < p, 0 <= b < p. Memoized:
+    cw_hash runs once per (shingle, seed) in the Python minhash twin, and
+    two md5s per call would outnumber the one base md5 per shingle."""
     a = md5_long(f"cw:a:{seed}") % (MERSENNE31 - 1) + 1
     b = md5_long(f"cw:b:{seed}") % MERSENNE31
     return a, b

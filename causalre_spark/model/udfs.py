@@ -14,9 +14,9 @@ per-document and bounded by k = max_top_k_spans, so shuffling the
 100 TB — the unit of distribution is the document. Cross-document
 operators (linking, dedup, triple aggregation) remain DataFrame algebra.
 
-The staged UDFs (score spans / score pairs separately) are kept for the
-operator registry and tests — they exercise the relational top-k / NMS /
-self-join operators in operators/.
+The staged UDFs (extract_verify_udf, make_score_spans_udf) feed the
+operator-registry query q_pipeline_spans, which exercises the relational
+top-k / NMS operators in operators/ on scored candidate spans.
 
 In production the frozen NumPy model is swapped for a broadcast torch
 model loaded once per Python worker (import-gated); interfaces unchanged.
@@ -26,7 +26,6 @@ from __future__ import annotations
 
 from collections.abc import Iterator
 
-import numpy as np
 import pandas as pd
 
 from causalre_spark.config import DEFAULT_CONFIG, PipelineConfig
@@ -43,9 +42,6 @@ except Exception:  # pragma: no cover
 DOCS_SCHEMA = "url string, text string, tokens array<string>, n_tokens int"
 SPANS_SCHEMA = (
     "url string, start int, end int, tag_score float, filter_score float"
-)
-PAIRS_SCHEMA = (
-    "url string, h_start int, h_end int, t_start int, t_end int, rel_score float"
 )
 DOC_EXTRACT_SCHEMA = (
     "url string, n_tokens int, text_ok boolean, "
@@ -107,8 +103,10 @@ def make_doc_extract_udf(cfg: PipelineConfig = DEFAULT_CONFIG):
     return udf
 
 
-def extract_docs_udf(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """pages(url, html) -> docs(url, text, tokens, n_tokens)."""
+def extract_verify_udf(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    """pages(url, html, expected_text) -> docs(url, text, tokens, n_tokens)
+    + text_ok flag (staged variant used by the operator-registry
+    queries)."""
     for pdf in batches:
         texts = [extract_text(bytes(h)) for h in pdf["html"]]
         toks = [tokenize(t) for t in texts]
@@ -118,6 +116,7 @@ def extract_docs_udf(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
                 "text": texts,
                 "tokens": toks,
                 "n_tokens": [len(t) for t in toks],
+                "text_ok": [a == b for a, b in zip(texts, pdf["expected_text"])],
             }
         )
 
@@ -145,38 +144,5 @@ def make_score_spans_udf(cfg: PipelineConfig = DEFAULT_CONFIG):
                 rows["tag_score"].extend(tag_scores.tolist())
                 rows["filter_score"].extend(fscores.tolist())
             yield pd.DataFrame(rows)
-
-    return udf
-
-
-def make_score_pairs_udf(cfg: PipelineConfig = DEFAULT_CONFIG):
-    """Grouped per document (applyInPandas over url): surviving spans +
-    tokens -> all ordered head/tail pairs (head != tail) with causal
-    logits (staged variant for the relational pipeline/tests)."""
-
-    def udf(pdf: pd.DataFrame) -> pd.DataFrame:
-        rows: dict[str, list] = {k: [] for k in
-                                 ("url", "h_start", "h_end", "t_start", "t_end", "rel_score")}
-        if len(pdf) == 0:
-            return pd.DataFrame(rows)
-        url = pdf["url"].iloc[0]
-        tokens = list(pdf["tokens"].iloc[0])
-        enc = batch.DocEncoding(tokens, cfg)
-        spans = sorted(zip(pdf["start"].astype(int), pdf["end"].astype(int)))
-        keys = [(h[0], h[1], t[0], t[1])
-                for h in spans for t in spans if h != t]
-        if keys:
-            arr = np.array(keys, dtype=np.int64)
-            scores = batch.rel_scores_batch(enc, arr[:, 0], arr[:, 1], arr[:, 2], arr[:, 3])
-        else:
-            scores = []
-        for (hs, he, ts, te), sc in zip(keys, scores):
-            rows["url"].append(url)
-            rows["h_start"].append(hs)
-            rows["h_end"].append(he)
-            rows["t_start"].append(ts)
-            rows["t_end"].append(te)
-            rows["rel_score"].append(float(sc))
-        return pd.DataFrame(rows)
 
     return udf

@@ -30,6 +30,9 @@ from causalre_spark.config import DEFAULT_CONFIG, PipelineConfig
 from causalre_spark.functions.hashing import md5_long_sql_spark
 from causalre_spark.functions.text import NONEMPTY_FORM_SQL, NORMALIZE_SQL
 
+# link_mentions' output: normalized form -> its canonical entity
+ENTITIES_SCHEMA = "form string, canonical_id long, canonical_form string"
+
 
 def normalized_forms(mentions: DataFrame, text_col: str = "text") -> DataFrame:
     """Distinct normalized mention forms.
@@ -536,9 +539,8 @@ def link_mentions(
         form_list = [r["form"] for r in forms.select("form").collect()]
         forms.unpersist()
         spark = mentions.sparkSession
-        return spark.createDataFrame(
-            link_forms_driver(form_list, cfg),
-            "form string, canonical_id long, canonical_form string")
+        return spark.createDataFrame(link_forms_driver(form_list, cfg),
+                                     ENTITIES_SCHEMA)
     # Int-keyed chain: every shuffle from here to CC — the signature
     # groupBy, the band self-join, the three jaccard-verify joins, the
     # star contraction — keys on the 60-bit md5-derived fid (the SAME

@@ -545,6 +545,9 @@ def ann_topk_pq(
     # codegen+compile toll plus the broadcast cross-join build.
     q = (emb.filter(F.col(id_col) == query_id)
          .select(F.col(vec_col).alias("qvec")).collect())
+    if not q:  # absent query id: no neighbours, the same columns
+        return emb.select(id_col, F.lit(None).cast("double").alias("adc_dist"),
+                          F.lit(None).cast("long").alias("rank")).limit(0)
     qvec = [float(x) for x in q[0]["qvec"]]
 
     def _sq(off: int, cs: list[float]) -> float:

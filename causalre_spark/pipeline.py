@@ -5,14 +5,15 @@ Stage order mirrors the reference's inference forward pass
 single Arrow UDF crossing (see model/udfs.py rationale) and all
 cross-document work as DataFrame algebra:
 
-  pages --(filter lang, repartition md5(url))--> fused doc-extract UDF
+  pages --(filter lang)--> fused doc-extract UDF
         --> spans / relations (explode)         [per-doc arrays -> rows]
         --> entity linking (MinHash-LSH + CC)   [relational]
         --> canonical triple aggregation        [relational]
 
 Scale design (local[32] here; reasoning at 1000 executors):
-  - repartition by md5(url): hot Zipf domains spread evenly because the
-    unit of work is the document; residual join skew is AQE's job.
+  - no repartition before the UDF: the parquet scan's size-based splits
+    balance it (the unit of work is the document, so hot Zipf domains
+    do not concentrate); residual join skew is AQE's job.
   - the fused UDF bounds per-doc output by k/k² (top-k inside), so the
     exploded spans/rels tables are ~10-100x smaller than the candidate
     sets — those never hit a shuffle.
@@ -26,12 +27,12 @@ Scale design (local[32] here; reasoning at 1000 executors):
 from __future__ import annotations
 
 import os
+import time
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from causalre_spark.config import DEFAULT_CONFIG, PipelineConfig
-from causalre_spark.functions.hashing import md5_long_sql_spark
 from causalre_spark.model.udfs import DOC_EXTRACT_SCHEMA, make_doc_extract_udf
 from causalre_spark.operators import linking
 
@@ -114,19 +115,16 @@ class StageIO:
                 else:
                     df.writeTo(ident).using("iceberg").createOrReplace()
             out = self.spark.read.table(ident)
-            if "_p" in out.columns:
-                out = out.drop("_p")
-            self._lineage(name, out)
-            return out
-        path = self._path(name)
-        if not self.done(name):
-            df = df_fn()
-            if partition_expr:
-                df.withColumn("_p", F.expr(partition_expr)) \
-                    .write.mode("overwrite").partitionBy("_p").parquet(path)
-            else:
-                df.write.mode("overwrite").parquet(path)
-        out = self.spark.read.parquet(path)
+        else:
+            path = self._path(name)
+            if not self.done(name):
+                df = df_fn()
+                if partition_expr:
+                    df.withColumn("_p", F.expr(partition_expr)) \
+                        .write.mode("overwrite").partitionBy("_p").parquet(path)
+                else:
+                    df.write.mode("overwrite").parquet(path)
+            out = self.spark.read.parquet(path)
         if "_p" in out.columns:
             out = out.drop("_p")
         self._lineage(name, out)
@@ -156,6 +154,10 @@ class StageIO:
         )
 
 
+TRIPLES_SCHEMA = ("cause_id long, cause string, predicate string, "
+                  "effect_id long, effect string, n_evidence long, max_score float")
+
+
 def canonical_triples(kept: DataFrame, rels: DataFrame, entities: DataFrame,
                       cleanup: list | None = None,
                       form_map: DataFrame | None = None) -> DataFrame:
@@ -170,7 +172,7 @@ def canonical_triples(kept: DataFrame, rels: DataFrame, entities: DataFrame,
     appended to `cleanup` for release after the caller's terminal action.
 
     form_map: optional pre-built (text -> form) dictionary shared with
-    link_mentions (see _link_and_materialize) — skips a second full
+    link_mentions (see link_and_materialize) — skips a second full
     distinct+normalize pass over the mention table.
     """
     if form_map is None:
@@ -243,28 +245,13 @@ def write_bucketed_graph(spark: SparkSession, triples: DataFrame,
 
 
 def extract_docs(pages: DataFrame, cfg: PipelineConfig) -> DataFrame:
-    """Per-document extraction stage (the expensive Arrow-UDF crossing),
-    shared by the full and incremental pipelines."""
-    eng = pages.filter(F.col("lang") == "en")
-    if cfg.salt_input:
-        # salted repartition for pathological input layouts (e.g. one
-        # giant file per hot domain). Deliberate tradeoff: an explicit
-        # repartition is user-specified partitioning, which AQE will
-        # NOT coalesce — so this is opt-in; by default the parquet
-        # scan's size-based splits (maxPartitionBytes) balance the
-        # UDF stage with zero shuffle.
-        eng = eng.repartition(
-            cfg.shuffle_partitions,
-            F.expr(f"pmod({md5_long_sql_spark('url')}, {cfg.salt_buckets * cfg.shuffle_partitions})"))
-    elif cfg.length_bucket:
-        # S4 UDF batching discipline (SURVEY §4): range-partition by
-        # document length so each Arrow batch holds similar-length
-        # docs — dense padded batches in the encoder UDF instead of
-        # worst-case padding. Opt-in: it shuffles the html payload,
-        # which only pays off when the encoder is the bottleneck
-        # (real transformer weights), not for the fast profile.
-        eng = eng.repartitionByRange(cfg.shuffle_partitions, F.length("text"))
-    return eng.select("url", "html", F.col("text").alias("expected_text")) \
+    """Per-document extraction (the expensive Arrow-UDF crossing), shared
+    by the full, incremental and streamed runs. No repartition: the
+    parquet scan's size-based splits (maxPartitionBytes) balance the UDF
+    stage with zero shuffle, residual skew is AQE's job, and the same
+    plan runs unchanged on a stream."""
+    return pages.filter(F.col("lang") == "en") \
+        .select("url", "html", F.col("text").alias("expected_text")) \
         .mapInPandas(make_doc_extract_udf(cfg), schema=DOC_EXTRACT_SCHEMA)
 
 
@@ -280,6 +267,31 @@ def explode_rels(docs: DataFrame) -> DataFrame:
         "r.rel_score", "r.rel_type", "r.h_text", "r.t_text")
 
 
+def _extract_stage(io: StageIO, pages: DataFrame, cfg: PipelineConfig,
+                   verify_extraction: bool, timings: dict | None = None,
+                   ) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """pages -> (docs, spans, relations) sinks, shared by run_pipeline and
+    run_incremental: checkpoint docs, check the byte-identical extraction
+    invariant on the sink, then explode spans/relations from the
+    persisted docs. Callers persist the spans/relations they consume.
+
+    With `timings`, docs are materialized eagerly and their wall time
+    recorded under 'n_docs'/'docs_secs' (bench decomposition)."""
+    docs = io.checkpoint("docs", lambda: extract_docs(pages, cfg))
+    if verify_extraction:
+        bad = docs.filter(~F.col("text_ok")).count()
+        if bad:
+            raise AssertionError(f"extraction not byte-identical for {bad} pages")
+    docs = docs.persist()
+    if timings is not None:
+        t0 = time.time()
+        timings["n_docs"] = docs.count()
+        timings["docs_secs"] = round(time.time() - t0, 2)
+    spans = io.checkpoint("spans", lambda: explode_spans(docs))
+    rels = io.checkpoint("relations", lambda: explode_rels(docs))
+    return docs, spans, rels
+
+
 def run_pipeline(
     spark: SparkSession,
     pages: DataFrame,
@@ -291,10 +303,8 @@ def run_pipeline(
 ) -> dict[str, DataFrame]:
     """Full pipeline; returns {'docs','spans','relations','entities','triples'}.
 
-    With `timings`, the doc-extraction stage is materialized eagerly and
-    its wall time recorded under 'docs_secs' (bench decomposition)."""
-    import time as _time
-
+    With `timings`, each stage is materialized eagerly and its wall time
+    recorded ('docs_secs', 'explode_secs', 'linking_secs')."""
     io = StageIO(spark, workdir, resume,
                  table_namespace=cfg.extra.get("table_namespace"))
 
@@ -309,32 +319,29 @@ def run_pipeline(
     # python twin (functions/text.curation_keep) is value-identical to
     # the relational gate column (tests assert bit-for-bit agreement),
     # so streamed flagging and batch gating never drift.
-    docs = io.checkpoint("docs", lambda: extract_docs(pages, cfg))
-    if verify_extraction:
-        bad = docs.filter(~F.col("text_ok")).count()
-        if bad:
-            raise AssertionError(f"extraction not byte-identical for {bad} pages")
-    docs = docs.persist()
-    if timings is not None:
-        _t0 = _time.time()
-        timings["n_docs"] = docs.count()
-        timings["docs_secs"] = round(_time.time() - _t0, 2)
-
-    kept = io.checkpoint("spans", lambda: explode_spans(docs)).persist()
-    rels = io.checkpoint("relations", lambda: explode_rels(docs)).persist()
+    docs, kept, rels = _extract_stage(io, pages, cfg, verify_extraction, timings)
+    kept, rels = kept.persist(), rels.persist()
     if timings is not None:
         # materialize the explodes eagerly so the tail decomposes into
         # attributable stages (spans/rels vs linking vs triples) instead
         # of lazy work landing wherever the first action happens to be
-        _t0 = _time.time()
+        t0 = time.time()
         kept.count(); rels.count()
-        timings["explode_secs"] = round(_time.time() - _t0, 2)
-        _t0 = _time.time()
+        timings["explode_secs"] = round(time.time() - t0, 2)
+        t0 = time.time()
 
-    entities, triples = _link_and_materialize(spark, io, kept, rels, cfg, workdir)
+    cleanup: list[DataFrame] = []
+    entities, triples = link_and_materialize(spark, io, kept, rels, cfg, cleanup)
     if timings is not None:
         entities.count()
-        timings["linking_secs"] = round(_time.time() - _t0, 2)
+        timings["linking_secs"] = round(time.time() - t0, 2)
+    if workdir is not None:
+        # triples are in the sink -> the tail's caches are dead weight
+        # (sweep sessions run many pipelines and must not accumulate
+        # cached blocks). Without a workdir the returned triples plan
+        # still reads them.
+        for df in cleanup:
+            df.unpersist()
     io.write_metrics()
     return {
         "docs": docs,
@@ -345,12 +352,15 @@ def run_pipeline(
     }
 
 
-def _link_and_materialize(spark, io: StageIO, kept: DataFrame, rels: DataFrame,
-                          cfg: PipelineConfig, workdir: str | None,
-                          ) -> tuple[DataFrame, DataFrame]:
-    """Global tail shared by run_pipeline and run_incremental: entity
+def link_and_materialize(spark: SparkSession, io: StageIO, kept: DataFrame,
+                         rels: DataFrame, cfg: PipelineConfig, cleanup: list,
+                         ) -> tuple[DataFrame, DataFrame]:
+    """The one linking tail (full, incremental and streamed runs): entity
     linking over all kept mention surfaces + canonical triple
-    materialization (S5 partitioned sink).
+    materialization (S5 partitioned sink). Returns (entities persisted,
+    triples); the tail's internal caches go into the caller-owned
+    `cleanup` list, to be released once the caller has materialized the
+    triples (sink write or localCheckpoint).
 
     early-exit: no extracted relations -> no triples, so the whole
     linking/canonicalization stage graph (LSH + jaccard verify + CC +
@@ -361,13 +371,10 @@ def _link_and_materialize(spark, io: StageIO, kept: DataFrame, rels: DataFrame,
     """
     if rels.isEmpty():
         entities = io.checkpoint("entities", lambda: spark.createDataFrame(
-            [], "form string, canonical_id long, canonical_form string"))
+            [], linking.ENTITIES_SCHEMA))
         triples = io.checkpoint("triples", lambda: spark.createDataFrame(
-            [], "cause_id long, cause string, predicate string, "
-                "effect_id long, effect string, n_evidence long, max_score float"))
+            [], TRIPLES_SCHEMA))
         return entities, triples
-
-    _stage_caches: list[DataFrame] = []
 
     # the (raw mention text -> normalized form) dictionary is the ONE
     # full pass over the distinct mention surfaces; build it once and
@@ -376,7 +383,7 @@ def _link_and_materialize(spark, io: StageIO, kept: DataFrame, rels: DataFrame,
     # Without sharing, each stage re-runs the distinct + normalization —
     # the most expensive relational scan of the tail, paid twice.
     rawmap = linking.mention_form_map(kept.select("text")).persist()
-    _stage_caches.append(rawmap)
+    cleanup.append(rawmap)
 
     # persisted: consumed twice (cause-side and effect-side broadcasts)
     entities = io.checkpoint(
@@ -390,16 +397,10 @@ def _link_and_materialize(spark, io: StageIO, kept: DataFrame, rels: DataFrame,
     # per-partition size (hash of the canonical id is uniform)
     triples = io.checkpoint(
         "triples",
-        lambda: canonical_triples(kept, rels, entities, cleanup=_stage_caches,
+        lambda: canonical_triples(kept, rels, entities, cleanup=cleanup,
                                   form_map=rawmap),
         partition_expr="pmod(cause_id, 64)",
         table_format=cfg.table_format)
-    if workdir is not None:
-        # triples materialized to the sink -> the broadcast dictionary's
-        # cache is dead weight; release it (sweep sessions run many
-        # pipelines and must not accumulate cached blocks)
-        for df_ in _stage_caches:
-            df_.unpersist()
     return entities, triples
 
 
@@ -450,28 +451,24 @@ def run_incremental(
 
     io = StageIO(spark, workdir, resume,
                  table_namespace=cfg.extra.get("table_namespace"))
-
-    def _delta_docs() -> DataFrame:
-        fresh = pages.join(prev_docs.select("url"), "url", "left_anti")
-        return extract_docs(fresh, cfg)
-
-    delta_docs = io.checkpoint("docs", _delta_docs)
-    if verify_extraction:
-        bad = delta_docs.filter(~F.col("text_ok")).count()
-        if bad:
-            raise AssertionError(f"extraction not byte-identical for {bad} pages")
-    delta_docs = delta_docs.persist()
-
-    delta_spans = io.checkpoint("spans", lambda: explode_spans(delta_docs))
-    delta_rels = io.checkpoint("relations", lambda: explode_rels(delta_docs))
+    fresh = pages.join(prev_docs.select("url"), "url", "left_anti")
+    delta_docs, delta_spans, delta_rels = _extract_stage(
+        io, fresh, cfg, verify_extraction)
+    # the delta's spans/relations are in their sinks: its docs cache is
+    # no longer read (the returned union reads the docs sink)
+    delta_docs.unpersist()
 
     docs = prev_docs.unionByName(delta_docs)
     kept = prev_spans.unionByName(delta_spans).persist()
     rels = prev_rels.unionByName(delta_rels).persist()
 
-    entities, triples = _link_and_materialize(spark, io, kept, rels, cfg, workdir)
-    io.metrics.append({"stage": "_delta", "partition": -1,
-                       "rows": int(delta_docs.count())})
+    cleanup: list[DataFrame] = []
+    entities, triples = link_and_materialize(spark, io, kept, rels, cfg, cleanup)
+    for df in cleanup:
+        df.unpersist()
+    # the delta size is the docs sink's lineage row count (no extra job)
+    io.metrics.append({"stage": "_delta", "partition": -1, "rows": sum(
+        m["rows"] for m in io.metrics if m["stage"] == "docs")})
     io.write_metrics()
     return {
         "docs": docs,
@@ -480,27 +477,6 @@ def run_incremental(
         "entities": entities,
         "triples": triples,
     }
-
-
-def _extract_verify_udf(batches):
-    """pages(url, html, expected_text) -> docs rows + text_ok flag (staged
-    variant used by the operator-registry queries)."""
-    import pandas as pd
-
-    from causalre_spark.extract import extract_text, tokenize
-
-    for pdf in batches:
-        texts = [extract_text(bytes(h)) for h in pdf["html"]]
-        toks = [tokenize(t) for t in texts]
-        yield pd.DataFrame(
-            {
-                "url": pdf["url"].values,
-                "text": texts,
-                "tokens": toks,
-                "n_tokens": [len(t) for t in toks],
-                "text_ok": [a == b for a, b in zip(texts, pdf["expected_text"])],
-            }
-        )
 
 
 def write_predictions_json(docs: DataFrame, path: str) -> None:

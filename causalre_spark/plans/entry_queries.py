@@ -2021,8 +2021,8 @@ def q_skew_salted_agg(spark, sf_dir):
     (source, salt-of-doc_id) so a hot domain's rows fan out across 16
     reducers instead of one; phase 2 combines the <=16 partials per key.
     The oracle IS the direct GROUP BY — proving the salted plan computes
-    identical results. (The pipeline's opt-in input salting is
-    pipeline.py cfg.salt_input; this registers the pattern itself under
+    identical results. (The pipeline itself leaves input skew to AQE —
+    tests/test_aqe_skew.py; this registers the salting pattern under
     the exact-correctness gate.)"""
     docs = _t(spark, sf_dir, "documents").select(
         "doc_id", "source", F.length("text").cast("long").alias("n_chars"))
@@ -2704,18 +2704,18 @@ def _pages_from_documents(spark, sf_dir) -> DataFrame:
 
 
 def q_pipeline_spans(spark, sf_dir):
-    from causalre_spark.model.udfs import DOCS_SCHEMA, make_score_spans_udf
+    from causalre_spark.model.udfs import (DOCS_SCHEMA, SPANS_SCHEMA,
+                                           extract_verify_udf,
+                                           make_score_spans_udf)
     from causalre_spark.operators.spans import nms_spans, span_text, topk_spans
-    from causalre_spark.pipeline import _extract_verify_udf
 
     pages = _pages_from_documents(spark, sf_dir)
     docs = pages.filter(F.col("lang") == "en").select(
         "url", "html", F.col("text").alias("expected_text")
-    ).mapInPandas(_extract_verify_udf, schema=DOCS_SCHEMA + ", text_ok boolean")
+    ).mapInPandas(extract_verify_udf, schema=DOCS_SCHEMA + ", text_ok boolean")
     docs = docs.drop("text_ok")
     cands = docs.select("url", "tokens").mapInPandas(
-        make_score_spans_udf(DEFAULT_CONFIG),
-        schema="url string, start int, end int, tag_score float, filter_score float")
+        make_score_spans_udf(DEFAULT_CONFIG), schema=SPANS_SCHEMA)
     kept = nms_spans(topk_spans(cands, DEFAULT_CONFIG), DEFAULT_CONFIG)
     return span_text(kept, docs).select(
         "url", F.col("start").cast("long").alias("start"),

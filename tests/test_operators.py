@@ -171,3 +171,20 @@ def test_pq_assign_and_adc_match_numpy_twin(spark):
     expect = sorted(twin.items(), key=lambda kv: (kv[1], kv[0]))[:10]
     assert [(r.vec_id, r.adc_dist) for r in sorted(topk, key=lambda r: r.rank)] \
         == [(vid, d) for vid, d in expect]
+
+
+def test_pq_topk_absent_query_is_empty(spark):
+    """A query id that is not in the table yields no neighbours: an
+    empty (id, adc_dist, rank) frame, not an IndexError."""
+    from causalre_spark.operators.similarity import ann_topk_pq
+
+    emb = spark.createDataFrame(
+        [(i, [float((i * 7 + j) % 5) for j in range(16)]) for i in range(6)],
+        "vec_id long, embedding array<float>")
+    got = ann_topk_pq(emb, query_id=99, k=3, m=4, ksub=4, dim=16)
+    assert got.columns == ["vec_id", "adc_dist", "rank"]
+    assert dict(got.dtypes) == {"vec_id": "bigint", "adc_dist": "double",
+                                "rank": "bigint"}
+    assert got.collect() == []
+    # and a present id still ranks the other rows
+    assert len(ann_topk_pq(emb, query_id=0, k=3, m=4, ksub=4, dim=16).collect()) == 3

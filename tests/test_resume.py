@@ -56,18 +56,6 @@ def test_partitioned_triple_sink_and_resume(spark):
     assert _triples_set(res2) == first
 
 
-def test_length_bucketing_same_results(spark):
-    """S4: repartitionByRange(length(text)) before the encoder UDF is a
-    physical-layout change only — identical results."""
-    from causalre_spark.config import PipelineConfig
-
-    pages = synth_pages_df(spark, 30, partitions=4)
-    plain = _triples_set(run_pipeline(spark, pages))
-    bucketed = _triples_set(
-        run_pipeline(spark, pages, cfg=PipelineConfig(length_bucket=True)))
-    assert bucketed == plain
-
-
 def test_iceberg_branch_write_read_resume(spark, monkeypatch, tmp_path):
     """The catalog-managed (iceberg) branch: writeTo(...).using('iceberg')
     with a qualified identifier, read-back via spark.read.table (NOT the
@@ -329,3 +317,44 @@ def test_predictions_json_sink_round_trip(spark):
     if obj.get("relations"):
         assert {"head", "tail", "type", "score"} <= set(obj["relations"][0])
     docs.unpersist()
+
+
+def _cached_entries(spark) -> int:
+    return spark._jsparkSession.sharedState().cacheManager().numCachedEntries()
+
+
+def _assert_only_returned_cached(spark, res):
+    """The session cache holds the frames a run returns and nothing
+    else: releasing them empties it."""
+    held = [df for df in res.values() if df.storageLevel.useMemory]
+    assert _cached_entries(spark) == len(held)
+    for df in held:
+        df.unpersist()
+    assert _cached_entries(spark) == 0
+
+
+def test_workdir_runs_cache_only_returned_frames(spark):
+    """No cached frame leaks from a workdir run, full or incremental:
+    the linking tail's mention dictionaries and the delta's docs cache
+    are released once the sinks are written."""
+    from causalre_spark.pipeline import run_incremental
+    from pyspark.sql import functions as F
+
+    wd_half = "/tmp/causalre_test_wd_cache_half"
+    wd_inc = "/tmp/causalre_test_wd_cache_inc"
+    for wd in (wd_half, wd_inc):
+        shutil.rmtree(wd, ignore_errors=True)
+    pages = synth_pages_df(spark, 30, partitions=4)
+    spark.catalog.clearCache()
+
+    full = run_pipeline(spark, pages.filter(F.col("url").rlike("[02468]$")),
+                        workdir=wd_half)
+    assert full["entities"].count() > 0  # the linking tail ran
+    _assert_only_returned_cached(spark, full)
+
+    inc = run_incremental(spark, pages, prev_workdir=wd_half, workdir=wd_inc)
+    assert inc["entities"].count() > 0
+    _assert_only_returned_cached(spark, inc)
+
+    for wd in (wd_half, wd_inc):
+        shutil.rmtree(wd, ignore_errors=True)

@@ -128,7 +128,13 @@ def test_streamed_bridge_matches_batch_pipeline(spark):
      .write.mode("append").parquet(src))
     run_ingest_once(spark, src, out)
 
+    spark.catalog.clearCache()
     bridged = link_streamed_batch(spark, sinks)
+    # cache contract: the bridge hands back only `entities` cached; the
+    # linking tail's intermediates are released after localCheckpoint
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    assert bridged["entities"].storageLevel.useMemory
+    assert cache.numCachedEntries() == 1
     batch = run_pipeline(spark, synth_pages_df(spark, 60, partitions=4))
 
     cols = ["cause_id", "cause", "predicate", "effect_id", "effect",
